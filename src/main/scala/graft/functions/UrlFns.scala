@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 /** URL filtering machinery, RefinedWeb §G.1 style
@@ -25,45 +25,16 @@ object UrlFns {
     domains.map(d => domain === d || domain.endsWith("." + d))
       .foldLeft(lit(false))(_ || _)
 
-  /** Non-overlapping occurrence count of literal `word` in `s`
-    * (assumes both lowercase). */
-  def occurrences(s: Column, word: String): Column =
-    ((length(s) - length(replace(s, lit(word), lit("")))) / word.length)
-      .cast("int")
-
   /** URL word-severity score, url_filter.py:262 `_compute_url_score`:
     * `min(0.8 * max_weight + min(total_weight / 3, 0.2), 1.0)` over
-    * matched words; 0.0 when nothing matches.
+    * matched words; 0.0 when nothing matches, null for a null URL.
+    * Scored by the native [[graft.plans.UrlWordScore]] kernel over
+    * Spark's `lower(url)`, folding the words in `weights.toSeq` order.
     */
   def urlScore(url: Column, weights: Map[String, Double]): Column = {
-    // One fold over a literal (word, weight, len) array instead of
-    // |weights| inlined occurrence chains: the old shape repeated the
-    // length/replace occurrence tree twice per word (max-weight leg +
-    // total leg), ~60 copies for the default 29-word table — most of a
-    // stage's codegen/compile cost at bench scale for identical per-row
-    // work. The fold accumulates (max weight seen, running total) in
-    // the SAME left-to-right `weights.toSeq` order as the old reduce,
-    // so the floating-point total is bit-identical.
-    val entries = array(weights.toSeq.map { case (w, wt) =>
-      struct(lit(w).as("w"), lit(wt).as("wt"),
-        lit(w.length).as("len")) }: _*)
-    graft.functions.Cols.bind(lower(url)) { u =>
-      val folded = aggregate(entries,
-        struct(lit(0.0).as("mx"), lit(0.0).as("tot")),
-        (acc, e) => {
-          val occ = ((length(u) - length(replace(u, e("w"), lit("")))) /
-            e("len")).cast("int")
-          struct(
-            greatest(acc("mx"),
-              when(occ > 0, e("wt")).otherwise(lit(0.0))).as("mx"),
-            (acc("tot") + occ.cast("double") * e("wt")).as("tot"))
-        })
-      graft.functions.Cols.bind(folded) { f =>
-        when(f("tot") === 0.0, lit(0.0))
-          .otherwise(least(f("mx") * 0.8 + least(f("tot") / 3.0, lit(0.2)),
-            lit(1.0)))
-      }
-    }
+    val (words, wts) = weights.toSeq.unzip
+    GraftColumnBridge.column(graft.plans.UrlWordScore(
+      GraftColumnBridge.expression(lower(url)), words, wts))
   }
 
   private val schemeHostPat = "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*"

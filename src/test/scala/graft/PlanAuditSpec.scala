@@ -210,6 +210,27 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.toLowerCase.contains("generate explode") || p.contains("Generate"))
   }
 
+  test("config-built url_filter scores with the native kernel inside codegen") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val pipeline = graft.pipeline.PipelineConfig.parse(
+      """operators:
+        |  - name: url_filter
+        |""".stripMargin)
+    val docs = Tables.load(spark, dir, "documents").withColumn("url",
+      concat(lit("https://"), col("source"), lit(".example.com/"), col("doc_id")))
+    val p = pipeline(docs).queryExecution.executedPlan
+    // the interpreted aggregate() fold (a CodegenFallback lambda) must
+    // not come back; the word score is one codegen'd expression
+    val s = p.toString
+    assert(!s.contains("aggregate(") && !s.contains("lambda"), s)
+    val kernel = graft.plans.UrlWordScore(
+      org.apache.spark.sql.catalyst.expressions.Literal(""), Nil, Nil).prettyName
+    assert(p.collect { case w: WholeStageCodegenExec => w }
+      .exists(_.toString.contains(kernel + "(")),
+      s"$kernel missing from every WholeStageCodegen subtree:\n$s")
+  }
+
   test("new TPC-H shapes keep their scale plans") {
     // q8: the full star joins every dimension as broadcast — the fact
     // table shuffles only for the final year aggregation
