@@ -27,6 +27,36 @@ object GraftSession {
   private[graft] def configuredCpus: Option[Int] =
     positiveEnvInt("SPARK_GRAFT_CPUS")
 
+  /** Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`,
+    * default 100): a bounded map from generated source to its compiled
+    * class, shared by every query in the JVM. It is a STATIC conf —
+    * `CodeGenerator` reads it once, when the JVM first compiles — so it
+    * is set here, where the SparkContext is built. `graft.Bench` and
+    * `graft.Verify` build their own sessions and read it from here too.
+    *
+    * The default is smaller than graft's working sets, and a cache that
+    * is smaller than a repeating cycle of classes misses on every access.
+    * Working sets, as Janino compiles on a first run (counted by
+    * `CodegenMetrics.METRIC_COMPILATION_TIME`, `local[4]`):
+    *   - one `StreamingCuration.start` micro-batch with a BM25 roll
+    *     (near-dup plan, `isEmpty` + `localCheckpoint`, sink write, the
+    *     `Bm25.refreshIndex` jobs): 93–97 classes, ~125 on a fold batch
+    *   - the 13-stage text capstone (`pipeline_curation_funnel`,
+    *     sf0.01): 230–274; the 12-stage multimodal capstone: 124–143;
+    *     the day-2 re-crawl (`recrawl_day2_corpus`): 97–126
+    * At 100 every warm micro-batch of that loop recompiled 93–97 classes
+    * (10 batches of 10 benchmark files) and loaded ~170–250 new classes
+    * for C2 to JIT again; a re-run of a capstone recompiled 103–277. At
+    * 1000 a warm micro-batch compiles 0 with a data-derived event time
+    * (4 with `current_timestamp()`, whose per-batch literal is inlined
+    * into the generated code), and a capstone re-run 0–22 (mostly the
+    * same stages under another whole-stage codegen id, which is part of
+    * the generated source). 1000 holds the largest working set about
+    * four times over, so one JVM can interleave the stream loop with
+    * the capstones (the test suite, a bench) and keep them all. */
+  val CodegenCacheMaxEntries: Int = 1000
+  private[graft] val CodegenCacheConf = "spark.sql.codegen.cache.maxEntries"
+
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
@@ -55,6 +85,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config(CodegenCacheConf, CodegenCacheMaxEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 

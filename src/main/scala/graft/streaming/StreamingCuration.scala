@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions._
   *   readStream → per-doc chain with NAMED observe nodes
   *   ([[Pipeline.observedStream]] — the funnel arrives per micro-batch
   *   through `QueryProgressEvent.observedMetrics`, zero extra jobs,
-  *   collected by [[StreamingMetricsListener]]) → streaming exact
-  *   dedup ([[StreamingOps.dedupStream]] — watermark-bounded
-  *   content-hash state) → streaming near-dup suppression
-  *   ([[StreamingOps.nearDupStreamRows]] — band-digest state, min-id
-  *   first-wins) → ONE foreachBatch sink that (a) lands each batch's
+  *   collected by [[StreamingMetricsListener]]) → ONE streaming
+  *   dedup layer ([[StreamingOps.nearDupStreamRows]] with
+  *   `dedupShorts`: band-digest state, min-id first-wins, plus a
+  *   content-hash branch for docs too short to shingle) → ONE
+  *   foreachBatch sink that (a) lands each batch's
   *   survivors under `out/batch=<id>/` (overwrite per id — a replayed
   *   micro-batch converges instead of appending twice) and (b) rolls a
   *   persisted search index one version forward under the
@@ -31,11 +31,20 @@ import org.apache.spark.sql.functions._
   * (the IndexStreamSpec discipline, now chain-level).
   *
   * Scale shape: state is narrow everywhere (content hashes, band
-  * digests) and watermark-bounded; the payload crosses the band
-  * explode only on gated survivors of the per-doc chain. At cluster
-  * scale the sink partitions land on distributed storage and the
-  * index refresh reads only its narrow persisted tables — nothing in
-  * the loop is corpus-proportional except the one-time base build. */
+  * digests), and the payload crosses the band explode only on gated
+  * survivors of the per-doc chain. The state is NOT bounded today: the
+  * query's watermark never advances, so no state store evicts and the
+  * band and hash state grow with every distinct doc ingested. The
+  * short-doc branch has its own `withWatermark`; when the per-doc
+  * gates drop every doc too short to shingle (the length and gopher
+  * gates of `configs/example_streaming_curation.yaml` do), that branch
+  * never sees a row, Spark counts a watermark that has seen no data as
+  * 0, and the query's watermark is the minimum over its watermarks
+  * (progress `eventTime.watermark` reads 1970-01-01T00:00:00Z after
+  * every batch). At cluster scale the sink partitions land on
+  * distributed storage and the index refresh reads only its narrow
+  * persisted tables; apart from the one-time base build, the unevicted
+  * dedup state is what grows with the corpus. */
 case class StreamingCuration(
     pipeline: Pipeline,
     lsh: MinHashLSH = MinHashLSH(),

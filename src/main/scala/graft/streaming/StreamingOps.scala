@@ -566,10 +566,20 @@ class StreamingMetricsListener(maxBatches: Int = 10000)
 
   /** `stageRows` carries the per-stage funnel counts of this batch when
     * the query was built with [[graft.pipeline.Pipeline.observedStream]]
-    * (name-keyed, pipeline-ordered by the zero-padded index prefix). */
+    * (name-keyed, pipeline-ordered by the zero-padded index prefix).
+    *
+    * `codegenCompiles` is how many classes Janino compiled since the
+    * previous progress event this listener saw (the delta of Spark's
+    * `CodegenMetrics.METRIC_COMPILATION_TIME` count). The counter is
+    * JVM-WIDE: it includes every query the JVM ran in that window, and
+    * with several streams on one listener the window is the gap between
+    * any two of their events. A warm loop whose generated classes stay
+    * in Spark's codegen cache reads 0 (see
+    * [[graft.GraftSession.CodegenCacheMaxEntries]]). */
   case class BatchMetrics(queryName: String, batchId: Long,
       inputRows: Long, recPerSec: Double, batchMs: Long,
-      stageRows: Seq[(String, Long)] = Seq.empty)
+      stageRows: Seq[(String, Long)] = Seq.empty,
+      codegenCompiles: Long = 0L)
 
   // bounded ring: an always-on 1 s-trigger stream emits ~86k batches a
   // day, and an unbounded queue is a driver memory leak (r16 review
@@ -583,6 +593,10 @@ class StreamingMetricsListener(maxBatches: Int = 10000)
   private val batchCount = new java.util.concurrent.atomic.AtomicInteger(0)
   private val totals =
     scala.collection.mutable.LinkedHashMap.empty[String, Long]
+  private val lastCompiles =
+    new java.util.concurrent.atomic.AtomicLong(compileCount)
+  private def compileCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** The retained (last `maxBatches`) batch rows. */
   def batches: Seq[BatchMetrics] = {
@@ -604,9 +618,11 @@ class StreamingMetricsListener(maxBatches: Int = 10000)
         totals.update(n, totals.getOrElse(n, 0L) + v)
       }
     }
+    val compiled = compileCount
     batchBuf.add(BatchMetrics(
       Option(p.name).getOrElse(p.id.toString), p.batchId,
-      p.numInputRows, p.processedRowsPerSecond, p.batchDuration, stages))
+      p.numInputRows, p.processedRowsPerSecond, p.batchDuration, stages,
+      compiled - lastCompiles.getAndSet(compiled)))
     batchCount.incrementAndGet()
     while (batchCount.get > maxBatches && batchBuf.poll() != null)
       batchCount.decrementAndGet()
@@ -629,7 +645,7 @@ class StreamingMetricsListener(maxBatches: Int = 10000)
     sb.append(f"Batches: ${bs.size}  Rows: $rows%,d  ")
     sb.append(f"Overall: $overall%,.0f rec/s%n")
     bs.foreach { b =>
-      sb.append(f"  batch ${b.batchId}%3d ${b.inputRows}%,10d rows ${b.batchMs}%6d ms ${b.recPerSec}%,12.0f rec/s%n")
+      sb.append(f"  batch ${b.batchId}%3d ${b.inputRows}%,10d rows ${b.batchMs}%6d ms ${b.recPerSec}%,12.0f rec/s ${b.codegenCompiles}%5d compiles%n")
     }
     sb.toString
   }

@@ -87,6 +87,47 @@ class StreamingCurationSpec extends SparkSpec {
     assert(rows("graft_sc_bm25_v2") == rows("graft_sc_bm25_full"))
   }
 
+  test("warm micro-batches compile no classes: the codegen cache holds the loop") {
+    implicit val ctx = spark.sqlContext
+    // every GraftSession-built session (TestSpark included) carries the
+    // sized cache; at Spark's default of 100 this loop's generated
+    // classes evict each other and Janino recompiles ~90 per batch
+    assert(spark.conf.get(GraftSession.CodegenCacheConf) ==
+      GraftSession.CodegenCacheMaxEntries.toString)
+    StreamingOps.clearIndexLog(spark, "graft_sc_cg")
+    val bm = Bm25()
+    bm.buildIndex(Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      "graft_sc_cg_v0", buckets = 4)
+    val mem = MemoryStream[(Long, String)]
+    // data-derived event time: `current_timestamp()` inlines each
+    // batch's literal into the generated code, a fresh class per batch
+    val docs = mem.toDF().toDF("doc_id", "text")
+      .withColumn("ts", timestamp_millis(col("doc_id") * 1000L + 1704067200000L))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sc_cg").toString
+    val (q, _) = StreamingCuration(perDoc, lsh, watermark = "10 minutes")
+      .start(docs, s"$tmp/out", s"$tmp/ckpt",
+        index = Some(("graft_sc_cg", "graft_sc_cg_v0",
+          (b: DataFrame, from: String, to: String) =>
+            bm.refreshIndex(b.select("doc_id", "text"), from, to))))
+    def text(id: Long) = (0 until 8).map(i => s"w${id}x$i").mkString(" ")
+    // the same shape every batch: 3 fresh docs, an exact re-post of an
+    // earlier one, a doc the length gate drops
+    def batch(b: Int): Seq[(Long, String)] = {
+      val ids = (0 until 3).map(k => b * 10L + k)
+      ids.map(id => id -> text(id)) ++
+        Seq(b * 10L + 5 -> text(math.max(b - 1, 0) * 10L), b * 10L + 6 -> "tiny")
+    }
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val after = try (0 until 5).map { b =>
+      mem.addData(batch(b): _*); q.processAllAvailable(); compiles
+    } finally q.stop()
+    val perBatch = after.zip(after.tail).map { case (a, b) => b - a }
+    assert(after.last == after(1),
+      s"Janino compiles per batch after the first (0 expected from the third on): $perBatch")
+    assert(spark.read.parquet(s"$tmp/out").count() == 15L)
+  }
+
   test("replayed micro-batch converges: partition overwrite + committed-version skip") {
     implicit val ctx = spark.sqlContext
     StreamingOps.clearIndexLog(spark, "graft_sc_rp")

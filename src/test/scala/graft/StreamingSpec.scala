@@ -174,6 +174,9 @@ class StreamingSpec extends SparkSpec {
     val sq = spark
     import sq.implicits._
     implicit val ctx = sq.sqlContext
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val c0 = compiles
     val listener = new graft.streaming.StreamingMetricsListener
     spark.streams.addListener(listener)
     val mem = MemoryStream[(Timestamp, String, Double)]
@@ -193,7 +196,11 @@ class StreamingSpec extends SparkSpec {
       val bs = listener.batches
       assert(bs.map(_.inputRows).sum == 3)
       assert(bs.forall(_.batchMs >= 0))
+      // per-batch deltas of the JVM-wide compile counter
+      assert(bs.forall(_.codegenCompiles >= 0))
+      assert(bs.map(_.codegenCompiles).sum <= compiles - c0)
       assert(listener.report.contains("rec/s"))
+      assert(listener.report.contains("compiles"))
     } finally {
       q.stop()
       spark.streams.removeListener(listener)
