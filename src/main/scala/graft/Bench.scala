@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
   /** Repo root derived from the classes directory — bench_full.json and
     * the baseline pins anchor here, not wherever the JVM was launched.
@@ -46,16 +44,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    // local[cpus] and as many shuffle partitions (default 4 when
+    // SPARK_GRAFT_CPUS is unset, where the builder would pick 32)
+    val spark = GraftSession.builder("graft-bench")
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config(GraftSession.CodegenCacheConf,
-        GraftSession.CodegenCacheMaxEntries.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM paths every query shares — parquet scan setup, codegen,

@@ -31,8 +31,8 @@ object GraftSession {
     * default 100): a bounded map from generated source to its compiled
     * class, shared by every query in the JVM. It is a STATIC conf —
     * `CodeGenerator` reads it once, when the JVM first compiles — so it
-    * is set here, where the SparkContext is built. `graft.Bench` and
-    * `graft.Verify` build their own sessions and read it from here too.
+    * is set here, where the SparkContext is built; `graft.Bench` and
+    * `graft.Verify` build their sessions through [[builder]] too.
     *
     * The default is smaller than graft's working sets, and a cache that
     * is smaller than a repeating cycle of classes misses on every access.

@@ -521,8 +521,9 @@ object Main {
   /** The continuous-curation capstone as a CLI job
     * ([[graft.streaming.StreamingCuration]]): `readStream` over the
     * config's loader path, the config's per-doc stages with named
-    * observe nodes, the one-layer streaming dedup (bands + short-doc
-    * hash branch), idempotent per-batch survivor partitions under
+    * observe nodes, the one-layer streaming dedup (MinHash bands, and a
+    * content-hash key in the same band state for docs too short to
+    * shingle), idempotent per-batch survivor partitions under
     * `streaming.out_path`, an optional BM25 roll per batch, and the
     * per-micro-batch funnel report from the engine's own
     * `observedMetrics` — drains what exists, prints the report, stops

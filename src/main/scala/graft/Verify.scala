@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,13 +6,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    // local[cpus] and as many shuffle partitions (default 4 when
+    // SPARK_GRAFT_CPUS is unset, where the builder would pick 32)
+    val spark = GraftSession.builder("graft-verify")
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config(GraftSession.CodegenCacheConf,
-        GraftSession.CodegenCacheMaxEntries.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -2,7 +2,9 @@ package graft.streaming
 
 import graft.operators.dedup.MinHashLSH
 import graft.pipeline.Pipeline
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
 import org.apache.spark.sql.functions._
 
 /** The CONTINUOUS curation capstone — the batch capstones (B58/B59)
@@ -13,11 +15,10 @@ import org.apache.spark.sql.functions._
   *   ([[Pipeline.observedStream]] — the funnel arrives per micro-batch
   *   through `QueryProgressEvent.observedMetrics`, zero extra jobs,
   *   collected by [[StreamingMetricsListener]]) → ONE streaming
-  *   dedup layer ([[StreamingOps.nearDupStreamRows]] with
-  *   `dedupShorts`: band-digest state, min-id first-wins, plus a
-  *   content-hash branch for docs too short to shingle) → ONE
-  *   foreachBatch sink that (a) lands each batch's
-  *   survivors under `out/batch=<id>/` (overwrite per id — a replayed
+  *   dedup layer ([[StreamingOps.nearDupStream]]: band-digest state,
+  *   min-id first-wins; a doc too short to shingle is keyed by its
+  *   content hash in the same state) → ONE foreachBatch sink that
+  *   (a) lands each batch's survivors under `out/batch=<id>/` (overwrite per id — a replayed
   *   micro-batch converges instead of appending twice) and (b) rolls a
   *   persisted search index one version forward under the
   *   [[StreamingOps.indexMaintenance]] commit-log discipline (same
@@ -30,21 +31,24 @@ import org.apache.spark.sql.functions._
   * serves identically to a from-scratch build over the curated corpus
   * (the IndexStreamSpec discipline, now chain-level).
   *
-  * Scale shape: state is narrow everywhere (content hashes, band
-  * digests), and the payload crosses the band explode only on gated
-  * survivors of the per-doc chain. The state is NOT bounded today: the
-  * query's watermark never advances, so no state store evicts and the
-  * band and hash state grow with every distinct doc ingested. The
-  * short-doc branch has its own `withWatermark`; when the per-doc
-  * gates drop every doc too short to shingle (the length and gopher
-  * gates of `configs/example_streaming_curation.yaml` do), that branch
-  * never sees a row, Spark counts a watermark that has seen no data as
-  * 0, and the query's watermark is the minimum over its watermarks
-  * (progress `eventTime.watermark` reads 1970-01-01T00:00:00Z after
-  * every batch). At cluster scale the sink partitions land on
-  * distributed storage and the index refresh reads only its narrow
-  * persisted tables; apart from the one-time base build, the unevicted
-  * dedup state is what grows with the corpus. */
+  * Scale shape: the query reads its source once and runs two stateful
+  * operators, the band-key drop and the per-doc win count, under one
+  * event-time watermark. Both are narrow (band keys, ids) and evict
+  * once the watermark passes them, so state is bounded by the docs of
+  * the last few `watermark` spans of event time, not by the corpus
+  * (exact bounds on [[StreamingOps.nearDupStream]]); the payload
+  * crosses the band explode only on gated survivors of the per-doc
+  * chain. The price of eviction: a duplicate that arrives long enough
+  * after its original is no longer suppressed, and rows too far behind
+  * the newest event are dropped as late data. Each watermark move also
+  * runs one no-data micro-batch, which takes a batch id. At cluster
+  * scale the sink partitions land on distributed storage and the index
+  * refresh reads only its narrow persisted tables.
+  *
+  * A checkpoint written by the earlier two-branch plan (it read its
+  * source twice and ran a third stateful operator for short docs)
+  * cannot resume: [[start]] fails before the query starts and names
+  * the checkpoint. */
 case class StreamingCuration(
     pipeline: Pipeline,
     lsh: MinHashLSH = MinHashLSH(),
@@ -55,14 +59,11 @@ case class StreamingCuration(
 
   /** The curated survivor stream (full rows, observe nodes attached).
     * One dedup layer does both jobs: an exact duplicate's signature is
-    * identical, so it collides in every band — and the un-shingleable
-    * short docs get their own content-hash branch
-    * (`dedupShorts = true`). A separate chained [[StreamingOps
-    * .dedupStream]] would need a second watermark on the same path,
-    * which multi-stateful streaming disallows. */
+    * identical, so it collides in every band, and a doc too short to
+    * shingle is keyed by its content hash in the same band state. */
   def curated(docs: DataFrame): DataFrame =
-    StreamingOps.nearDupStreamRows(pipeline.observedStream(docs),
-      lsh, idCol, tsCol, textCol, watermark, dedupShorts = true)
+    StreamingOps.nearDupStream(pipeline.observedStream(docs),
+      lsh, idCol, tsCol, textCol, watermark)
 
   /** Start the job: idempotent per-batch survivor partitions plus an
     * optional index roll (`index` = (base table name, start version,
@@ -86,7 +87,9 @@ case class StreamingCuration(
       (new java.util.concurrent.atomic.AtomicReference[String](recovered),
         new java.util.concurrent.atomic.AtomicLong(committedId))
     }
-    val q = curated(docs).writeStream
+    val out = curated(docs)
+    StreamingCuration.requireResumable(spark, checkpoint, out)
+    val q = out.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("update")
       .foreachBatch {
@@ -112,5 +115,34 @@ case class StreamingCuration(
       }
       .start()
     (q, state.map(_._1))
+  }
+}
+
+object StreamingCuration {
+  /** Fail before `start` when `checkpoint` was written by a query that
+    * read a different number of sources than `query` does. Spark would
+    * otherwise kill the query thread with an assertion that names no
+    * setting a user can change. The usual cause is a checkpoint from
+    * the earlier two-branch near-dup plan, which read its source twice;
+    * its state cannot be carried over. */
+  private def requireResumable(spark: SparkSession, checkpoint: String,
+      query: DataFrame): Unit = {
+    val offsets = new Path(checkpoint, "offsets")
+    if (offsets.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(offsets)) {
+      val written = new OffsetSeqLog(spark, offsets.toString).getLatest()
+        .map(_._2.offsets.size)
+      // Spark gives one source to each distinct streaming leaf
+      val reads = query.queryExecution.analyzed.collectLeaves()
+        .filter(_.isStreaming).distinct.size
+      written.filter(_ != reads).foreach { n =>
+        throw new IllegalStateException(
+          s"checkpoint $checkpoint was written by a query with $n sources, " +
+            s"but this curation query reads $reads; its state cannot be " +
+            "resumed. Restart on a fresh checkpoint_path and out_path (and " +
+            "bm25_base, if set): the survivors already under the old " +
+            "out_path stay valid, but a fresh checkpoint restarts batch ids " +
+            "at 0 and would overwrite their batch=<id> partitions.")
+      }
+    }
   }
 }

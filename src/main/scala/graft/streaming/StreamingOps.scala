@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -421,7 +423,7 @@ object StreamingOps {
   /** Per-partition MIN-id collapse: one surviving row per `keyCol`
     * value, the row with the smallest `idCol` (ids totally ordered —
     * shuffle-order-independent). THE implementation behind both
-    * [[dedupStream]]'s per-content-hash collapse and nearDupImpl's
+    * [[dedupStream]]'s per-content-hash collapse and [[nearDupStream]]'s
     * per-band collapse (previously two hand-rolled copies — r16 review
     * finding, the SegmentedManifest drift argument). Input must be
     * repartitioned BY `keyCol` first so a key never spans partitions;
@@ -455,103 +457,83 @@ object StreamingOps {
       .dropDuplicatesWithinWatermark("content_hash")
   }
 
-  /** Streaming NEAR-dup suppression: drop a document when any of its
-    * MinHash band digests was already seen inside the watermark — the
-    * incremental twin of [[graft.operators.dedup.MinHashLSH]]'s
-    * keep-first semantics (a colliding band ⇒ likely near-duplicate ⇒
+  /** Streaming NEAR-dup suppression, the incremental twin of
+    * [[graft.operators.dedup.MinHashLSH]]'s keep-first semantics: drop a
+    * document when any of its MinHash band digests was already seen
+    * inside the watermark (a colliding band ⇒ likely near-duplicate ⇒
     * suppress the later arrival). Banding is OR-ed by exploding one row
-    * per band before the keyed drop, then collapsing back to one row
-    * per survivor: a doc survives iff ALL of its bands were unseen, so
-    * survivors re-aggregate to their full band count. State is the
-    * band-digest set inside the watermark, partitioned by the shuffle
-    * like any keyed state. */
+    * per band before the keyed drop, then collapsing back to one row per
+    * doc: a doc survives iff ALL of its bands were unseen, so survivors
+    * re-aggregate to their full band count. Emits the survivors' FULL
+    * input rows, so a curated stream feeds a sink directly; the payload
+    * rides the per-band explode and its repartition.
+    *
+    * This is the whole streaming dedup layer. An exact duplicate of a
+    * shingleable doc has an identical signature, so it collides in every
+    * band. A doc too short to shingle carries no near-dup signal (the
+    * batch twin never buckets it), so its one band is
+    * `"s:" + contentHashMd5(text)`: exact duplicates collide, distinct
+    * short docs do not. Band digests are 32-char md5 hex, so an `"s:"`
+    * key never collides with one. Both kinds of doc share one scan, one
+    * watermark and one band state.
+    *
+    * The watermark runs on a coarse clock: event time floored to a
+    * multiple of the `watermark` delay d, with a delay of 2d. Spark
+    * inlines the watermark value into the generated predicates of both
+    * stateful operators and runs a no-data micro-batch to evict when it
+    * moves. A watermark that moved with every batch recompiled every
+    * batch (2 classes per warm batch in `StreamingCurationSpec`'s compile
+    * gate) and ran the extra batch each time. On the floored clock it
+    * moves once per d of event time. A row is dropped as late only when
+    * it is more than d older than the newest event seen, as with a
+    * plain `withWatermark(ts, d)`. A band key stays in state until the
+    * newest event time seen is 3d–4d past its doc (a doc's win count
+    * leaves sooner), so the state is bounded by the docs of that window,
+    * not by the corpus. */
   def nearDupStream(docs: DataFrame,
       lsh: graft.operators.dedup.MinHashLSH = graft.operators.dedup.MinHashLSH(),
       idCol: String = "doc_id", tsCol: String = "ts",
-      textCol: String = "text", watermark: String = "1 hour"): DataFrame =
-    nearDupImpl(docs, lsh, idCol, tsCol, textCol, watermark, carryRows = false)
-
-  /** [[nearDupStream]] emitting the survivors' FULL rows instead of
-    * ids — the composable form (a curated stream feeds a sink
-    * directly; joining ids back would need a second stateful
-    * stream-stream join). The payload rides the per-band explode and
-    * its repartition, so for WIDE payloads (media bytes) prefer the
-    * id-only variant and join at the sink.
-    *
-    * `dedupShorts = true` makes this the WHOLE streaming dedup layer:
-    * an exact duplicate of any shingleable doc carries an identical
-    * signature, hence identical digests in EVERY band, so the band
-    * state already suppresses it — exactly one keep-first layer, not
-    * two chained stateful ops (a separate upstream
-    * [[dedupStream]] would need a second watermark, which
-    * multi-stateful streaming disallows along one path; here the only
-    * extra state is a content-hash branch for the un-shingleable
-    * short docs, on its own disjoint path with its own watermark). */
-  def nearDupStreamRows(docs: DataFrame,
-      lsh: graft.operators.dedup.MinHashLSH = graft.operators.dedup.MinHashLSH(),
-      idCol: String = "doc_id", tsCol: String = "ts",
-      textCol: String = "text", watermark: String = "1 hour",
-      dedupShorts: Boolean = false): DataFrame =
-    nearDupImpl(docs, lsh, idCol, tsCol, textCol, watermark,
-      carryRows = true, dedupShorts = dedupShorts)
-
-  private def nearDupImpl(docs: DataFrame,
-      lsh: graft.operators.dedup.MinHashLSH,
-      idCol: String, tsCol: String,
-      textCol: String, watermark: String, carryRows: Boolean,
-      dedupShorts: Boolean = false): DataFrame = {
-    val inputCols = docs.columns.toSeq
-    val base = docs
-      .withColumn("__row", struct(inputCols.map(col): _*))
+      textCol: String = "text", watermark: String = "1 hour"): DataFrame = {
+    val sh = col("__sh")
+    // the watermark clock's step d: the `watermark` delay in ms, parsed
+    // as withWatermark parses it
+    val step = math.max(1L, EventTimeWatermark.getDelayMs(
+      IntervalUtils.fromIntervalString(watermark)))
+    val ms = unix_millis(col(tsCol))
+    val banded = docs
+      .withColumn("__row", struct(docs.columns.toSeq.map(col): _*))
+      .withColumn("__wts", timestamp_millis(ms - pmod(ms, lit(step))))
       .withColumn("__sh",
         graft.functions.TextFns.wordShingles(col(textCol), lsh.shingleSize))
-    // Docs too short to shingle carry no near-dup signal: the batch twin
-    // ([[graft.operators.dedup.MinHashLSH.buckets]]) never emits them, so
-    // they pass through here. Without the split they would all share one
-    // degenerate all-null band digest and every short doc after the first
-    // would be silently suppressed.
-    val shortsBase = base.filter(size(col("__sh")) === 0)
-    val shortsD =
-      if (!dedupShorts) shortsBase
-      else shortsBase
-        .withColumn("__h", graft.functions.TextFns.contentHashMd5(col(textCol)))
-        .withWatermark(tsCol, watermark)
-        .dropDuplicatesWithinWatermark("__h")
-    val shorts =
-      if (carryRows) shortsD.select(col("__row"))
-      else shortsD.select(col(idCol))
+      .filter(size(sh) >= 0) // a null text shingles to null: no key, dropped
+      .withColumn("__bands",
+        when(size(sh) === 0, array(concat(lit("s:"),
+          graft.functions.TextFns.contentHashMd5(col(textCol)))))
+        // let-bind the signature (Cols.bind): bandDigests slices it once
+        // per band, and an INLINED signature tree would re-compute the
+        // whole per-shingle hash pass per band digest (no CSE inside
+        // higher-order lambdas — the same trap signatureFromShingles
+        // avoids internally for its base-hash array)
+        .otherwise(graft.functions.Cols.bind(
+          lsh.signatureFromShingles(sh))(sig => lsh.bandDigests(sig))))
+      .select(col(idCol), col("__wts"), col("__bands"), col("__row"))
+      .withColumn("__band", explode(col("__bands")))
+      .repartition(col("__band"))
     // Deterministic intra-batch winner: rows are clustered by band, then
-    // each partition collapses every band to its MIN-id row (a per-band
-    // hash map, O(distinct bands) memory — streaming can't sort), so the
+    // each partition collapses every band to its MIN-id row, so the
     // stateful drop sees exactly one contender per band per batch. Ids
     // are totally ordered, so band wins can never split across a
     // duplicate set arriving in one batch (which would drop every copy):
     // the min-id doc of each colliding cluster wins all its bands and
     // survives, independent of shuffle row order.
-    // let-bind the signature (Cols.bind): bandDigests slices it once
-    // per band, and an INLINED signature tree would re-compute the
-    // whole per-shingle hash pass per band digest (no CSE inside
-    // higher-order lambdas — the same trap signatureFromShingles
-    // avoids internally for its base-hash array)
-    val banded = base.filter(size(col("__sh")) > 0)
-      .withColumn("__bands", graft.functions.Cols.bind(
-        lsh.signatureFromShingles(col("__sh")))(sig => lsh.bandDigests(sig)))
-      .select(Seq(col(idCol), col(tsCol), col("__bands")) ++
-        (if (carryRows) Seq(col("__row")) else Nil): _*)
-      .withColumn("__band", explode(col("__bands")))
-      .repartition(col("__band"))
-    val collapsed = collapseMinBy(banded, "__band", idCol)
-    val aggCols = Seq(first(col("__bands")).as("__bands")) ++
-      (if (carryRows) Seq(first(col("__row")).as("__row")) else Nil)
-    val survivors = collapsed
-      .withWatermark(tsCol, watermark)
+    collapseMinBy(banded, "__band", idCol)
+      .withWatermark("__wts", s"${2 * step} milliseconds")
       .dropDuplicatesWithinWatermark("__band")
-      .groupBy(col(idCol), window(col(tsCol), "1 second"))
-      .agg(count(lit(1)).as("__won"), aggCols: _*)
+      .groupBy(col(idCol), col("__wts"))
+      .agg(count(lit(1)).as("__won"), first(col("__bands")).as("__bands"),
+        first(col("__row")).as("__row"))
       .filter(col("__won") === size(col("__bands")))
-    if (carryRows)
-      survivors.select(col("__row")).union(shorts).select(col("__row.*"))
-    else survivors.select(col(idCol)).union(shorts)
+      .select(col("__row.*"))
   }
 }
 

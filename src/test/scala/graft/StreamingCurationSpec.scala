@@ -74,8 +74,10 @@ class StreamingCurationSpec extends SparkSpec {
     assert(totals("text_length_filter") == 6L) // doc 3 dropped
 
     // the index rolled forward once per non-empty batch and serves
-    // exactly like a from-scratch build over the curated corpus
-    assert(live.get.get == "graft_sc_bm25_v2")
+    // exactly like a from-scratch build over the curated corpus. Version
+    // names carry the batch id: batch 1 is the no-data batch the first
+    // watermark move runs, so the second data batch is batch 2 → v3
+    assert(live.get.get == "graft_sc_bm25_v3")
     val curated = all.join(streamed.toSeq.toDF("doc_id"), "doc_id")
     bm.buildIndex(curated.select("doc_id", "text"), "graft_sc_bm25_full",
       buckets = 4)
@@ -84,7 +86,7 @@ class StreamingCurationSpec extends SparkSpec {
     def rows(name: String) = bm.searchIndexed(spark, name, queries, k = 5)
       .select("query_id", "doc_id", "score", "rnk")
       .as[(Long, Long, Double, Int)].collect().toSet
-    assert(rows("graft_sc_bm25_v2") == rows("graft_sc_bm25_full"))
+    assert(rows("graft_sc_bm25_v3") == rows("graft_sc_bm25_full"))
   }
 
   test("warm micro-batches compile no classes: the codegen cache holds the loop") {
@@ -126,6 +128,72 @@ class StreamingCurationSpec extends SparkSpec {
     assert(after.last == after(1),
       s"Janino compiles per batch after the first (0 expected from the third on): $perBatch")
     assert(spark.read.parquet(s"$tmp/out").count() == 15L)
+  }
+
+  test("one scan, 2 state operators: the watermark advances and band state plateaus") {
+    implicit val ctx = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    // data-derived event time, one minute per id: batch b spans minutes
+    // 60b..60b+4, so each batch lands an hour of event time past the
+    // previous one, well past the 10-minute watermark
+    val docs = mem.toDF().toDF("doc_id", "text")
+      .withColumn("ts", timestamp_millis(col("doc_id") * 60000L + 1704067200000L))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sc_wm").toString
+    val (q, _) = StreamingCuration(perDoc, lsh, watermark = "10 minutes")
+      .start(docs, s"$tmp/out", s"$tmp/ckpt")
+    def text(id: Long) = (0 until 8).map(i => s"w${id}x$i").mkString(" ")
+    // 3 fresh docs, an exact re-post of one, and a doc too short to
+    // shingle that the length gate drops: no short doc reaches the dedup
+    def batch(b: Int): Seq[(Long, String)] = {
+      val ids = (0 until 3).map(k => b * 60L + k)
+      ids.map(id => id -> text(id)) ++
+        Seq(b * 60L + 3 -> text(b * 60L), b * 60L + 4 -> "tiny")
+    }
+    val nBatches = 5
+    try (0 until nBatches).foreach { b =>
+      mem.addData(batch(b): _*); q.processAllAvailable()
+    } finally q.stop()
+    val progress = q.recentProgress.toSeq
+    val data = progress.filter(_.numInputRows > 0)
+    // the source is read once: progress counts each row added once
+    assert(progress.map(_.numInputRows).sum == nBatches * 5L)
+    assert(data.size == nBatches)
+    assert(data.forall(_.stateOperators.length == 2),
+      data.map(_.stateOperators.map(_.operatorName).mkString(",")))
+    // batch 0's data moves the watermark, so every later batch runs
+    // with it past the epoch
+    val wm = data.map(p => java.time.Instant.parse(p.eventTime.get("watermark")))
+    assert(wm.head == java.time.Instant.EPOCH)
+    assert(wm.tail.forall(_.isAfter(java.time.Instant.EPOCH)), wm)
+    // band state holds the current and the previous batch's keys only
+    val bandRows = data.map(_.stateOperators
+      .find(_.operatorName == "dedupeWithinWatermark").get.numRowsTotal)
+    assert(bandRows.tail.distinct.size == 1 && bandRows.last < nBatches * bandRows.head,
+      s"band-state rows per data batch: $bandRows")
+    assert(spark.read.parquet(s"$tmp/out").count() == nBatches * 3L)
+  }
+
+  test("a checkpoint written with two sources fails before start, naming it") {
+    implicit val ctx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sc_ck").toString
+    val ckpt = s"$tmp/ckpt"
+    val a = MemoryStream[(Long, Timestamp, String)]
+    val b = MemoryStream[(Long, Timestamp, String)]
+    val two = a.toDF().union(b.toDF()).writeStream.format("noop")
+      .option("checkpointLocation", ckpt).start()
+    try {
+      a.addData((1L, t(0), "alpha beta gamma delta epsilon words flow here"))
+      two.processAllAvailable()
+    } finally two.stop()
+    val e = intercept[IllegalStateException] {
+      StreamingCuration(perDoc, lsh, watermark = "10 minutes")
+        .start(a.toDF().toDF("doc_id", "ts", "text"), s"$tmp/out", ckpt)
+        ._1.stop()
+    }
+    assert(e.getMessage.contains(ckpt), e.getMessage)
+    assert(e.getMessage.contains("2 sources"), e.getMessage)
+    assert(e.getMessage.contains("fresh checkpoint_path"), e.getMessage)
+    assert(!new java.io.File(s"$tmp/out").exists())
   }
 
   test("replayed micro-batch converges: partition overwrite + committed-version skip") {
