@@ -2,28 +2,30 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage cut for self-referencing operators — the shared form of the
-  * fix the fused curation capstone measured (SURVEY §5.12/§16): a
-  * keep-first/near-dup operator references its input at least twice
-  * (winners ⋈ input), so composed lazily after expression-deriving
-  * stages the upstream chain re-evaluates once per reference, AND
-  * Catalyst's filter pushdown substitutes derived columns' full
-  * expressions into every predicate reference below the join —
-  * exponential recompute across stacked dedup layers (naive fused
-  * 11-stage chain: >703 s where staged ran 114 s at 2.25M rows).
+/** Lineage cut for operators that reference their input more than
+  * once — URL dedup's narrow winners semi-joined back to its input,
+  * the pHash-hamming, video-frame and cross-modal joins, the re-crawl
+  * state captures. Composed lazily after expression-deriving stages,
+  * each reference re-evaluates the upstream chain, AND Catalyst's
+  * filter pushdown substitutes derived columns' full expressions into
+  * every predicate reference below the join — recompute that compounds
+  * across stacked multi-reference layers (SURVEY §5.12/§16: a naive
+  * fused 11-stage chain ran >703 s where staged ran 114 s at 2.25M
+  * rows). Batch keep-first ([[graft.operators.dedup.KeepFirst]]) is
+  * one window over a single reference and needs no cut.
   *
   * A LAZY `localCheckpoint(eager = false)` shares ONE
   * cached-on-first-use RDD between the references while the job stays
   * a single action, and compacts the printed plan to a LogicalRDD
   * (`persist()` instead renders the cache name from the EXPANDED tree,
-  * which doubles per dedup layer — at stage 8+ the *string* is the
-  * driver OOM).
+  * which doubles per multi-reference layer — at stage 8+ the *string*
+  * is the driver OOM).
   *
   * Streams cannot checkpoint, and neither can an OBSERVED plan
   * (`Pipeline.observed` funnels): a checkpoint would bury the upstream
   * CollectMetrics nodes inside an opaque RDD and their Observations
   * would read 0. Both fall back to the plain multi-reference, which
-  * those diagnostic modes accept (bounded per micro-batch / per run).
+  * those modes accept (bounded per micro-batch / per run).
   */
 object Lineage {
   def cut(df: DataFrame): DataFrame = {

@@ -24,26 +24,19 @@ import org.apache.spark.sql.functions._
   * subtrees (narrow winners agg + the join's own key column) and paid a
   * second exchange (or a broadcast build job) for the join.
   *
-  * Streaming plans cannot host a non-time window; they keep the
-  * agg+semi-join shape (per-micro-batch state is bounded by the
-  * trigger, where two evaluations of the key are acceptable).
+  * Batch only: a stream cannot host a non-time window, and the
+  * streaming answer is [[graft.streaming.StreamingOps.dedupStream]]'s
+  * watermarked state.
   */
 object KeepFirst {
   def apply(df: DataFrame, key: Column, idCol: String,
       keyCol: String = "__dedup_key"): DataFrame = {
-    val keyed = df.withColumn(keyCol, key)
-    if (df.isStreaming) {
-      val winners = keyed.select(col(keyCol), col(idCol))
-        .groupBy(keyCol).agg(min(idCol).as(idCol))
-      keyed.join(winners, Seq(keyCol, idCol), "left_semi").drop(keyCol)
-    } else {
-      import org.apache.spark.sql.expressions.Window
-      keyed
-        .withColumn("__kf_rn", row_number().over(
-          Window.partitionBy(col(keyCol)).orderBy(col(idCol))))
-        .filter(col("__kf_rn") === 1)
-        .drop("__kf_rn", keyCol)
-    }
+    import org.apache.spark.sql.expressions.Window
+    df.withColumn(keyCol, key)
+      .withColumn("__kf_rn", row_number().over(
+        Window.partitionBy(col(keyCol)).orderBy(col(idCol))))
+      .filter(col("__kf_rn") === 1)
+      .drop("__kf_rn", keyCol)
   }
 }
 

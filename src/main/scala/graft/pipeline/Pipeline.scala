@@ -15,16 +15,35 @@ import org.apache.spark.sql.functions._
   * materialized per-stage batches. Funnel observability comes from
   * `Dataset.observe`, which counts rows in-flight without extra jobs.
   */
-sealed trait PipelineOp { def name: String }
+sealed trait PipelineOp {
+  def name: String
+  /** This op's transform — the one place the three op kinds differ;
+    * every execution mode of [[Pipeline]] runs its stages through it. */
+  def applyTo(df: DataFrame): DataFrame
+}
 
 /** Boolean keep-predicate over the current schema (reference Filter). */
-case class FilterOp(name: String, predicate: DataFrame => Column) extends PipelineOp
+case class FilterOp(name: String, predicate: DataFrame => Column) extends PipelineOp {
+  def applyTo(df: DataFrame): DataFrame = df.filter(predicate(df))
+}
 
 /** Adds/rewrites columns (reference Refiner). */
-case class RefineOp(name: String, refine: DataFrame => DataFrame) extends PipelineOp
+case class RefineOp(name: String, refine: DataFrame => DataFrame) extends PipelineOp {
+  def applyTo(df: DataFrame): DataFrame = refine(df)
+}
 
-/** Keep-first dedup on a derived key (reference Deduplicator). */
-case class DedupOp(name: String, key: DataFrame => Column, idCol: String) extends PipelineOp
+/** Keep-first dedup on a derived key (reference Deduplicator). Batch
+  * only: keep-first is a non-time window, which a stream cannot host,
+  * so a streaming input is rejected while the plan is built — naming
+  * the stage — rather than when the query starts. */
+case class DedupOp(name: String, key: DataFrame => Column, idCol: String) extends PipelineOp {
+  def applyTo(df: DataFrame): DataFrame = {
+    if (df.isStreaming) throw new IllegalArgumentException(
+      s"pipeline stage '$name' is a batch DedupOp and cannot run on a stream; " +
+        "deduplicate streams with graft.streaming.StreamingOps.dedupStream")
+    graft.operators.dedup.KeepFirst(df, key(df), idCol)
+  }
+}
 
 /** Per-operator runtime metrics (reference framework/metrics: each
   * stage reports rows in/out, pass-rate, wall time and records/sec). */
@@ -33,56 +52,52 @@ case class StageMetrics(op: String, rowsIn: Long, rowsOut: Long, wallSec: Double
   def recPerSec: Double = if (wallSec > 0) rowsIn / wallSec else 0.0
 }
 
+/** Execution modes. Every mode is one [[fold]] of the ops with its own
+  * per-stage hook; pick by what the run must answer:
+  *   - [[apply]]: fused, no per-stage numbers — production runs.
+  *   - [[observed]] / [[observedStream]]: fused plus a row counter per
+  *     stage, zero extra jobs — production runs that report a funnel.
+  *   - [[profile]] / [[funnelStaged]]: every stage materialized and
+  *     counted on its own, with per-stage wall time — finding the slow
+  *     operator, or exact counts where an operator's internal lineage
+  *     cut hides the fused counters.
+  *   - [[stagedApply]]: staged, final frame only — chains whose fused
+  *     plan re-derives an expensive input per reference (see the
+  *     method).
+  *   - [[rejectionAudit]]: staged, the stage that dropped each row. */
 case class Pipeline(ops: Seq[PipelineOp]) {
 
-  /** Apply all ops; lazy (one action materializes the whole chain),
-    * with one lineage cut per dedup stage — see [[dedupCut]]. */
-  def apply(df: DataFrame): DataFrame = ops.foldLeft(df) {
-    case (d, FilterOp(_, p)) => d.filter(p(d))
-    case (d, RefineOp(_, f)) => f(d)
-    case (d, DedupOp(_, k, id)) =>
-      val c = dedupCut(d)
-      graft.operators.dedup.KeepFirst(c, k(c), id)
-  }
+  /** The one fold behind every mode: `stage(i, name, d)` wraps the
+    * input (`i = 0`, "input") and each op's output (`i` = the op's
+    * 1-based index) and returns the frame the next op reads. */
+  private def fold(df: DataFrame)(stage: (Int, String, DataFrame) => DataFrame): DataFrame =
+    ops.zipWithIndex.foldLeft(stage(0, "input", df)) { case (d, (op, i)) =>
+      stage(i + 1, op.name, op.applyTo(d))
+    }
 
-  /** A dedup references its input twice (winners ⋈ input). Composed
-    * naively, every dedup stage doubles the number of upstream
-    * evaluations — the fused capstone chain (3 dedup layers over a
-    * regexp-heavy 2.25M-row prefix) re-ran its prefix ~8× and took
-    * >10 min where staged execution took 114 s — and the *printed*
-    * plan tree grows exponentially with dedup count. A LAZY
-    * `localCheckpoint(eager = false)` shares ONE cached-on-first-use
-    * RDD between the two branches (and every later stage) while the
-    * job stays a single action, and compacts the plan to a LogicalRDD.
-    * Streaming plans cannot checkpoint; there the double-reference is
-    * per-micro-batch and bounded by the trigger size. Observed plans
-    * cannot either — the checkpoint would bury upstream CollectMetrics
-    * nodes and their Observations would read 0. */
-  private def dedupCut(d: DataFrame): DataFrame = graft.operators.Lineage.cut(d)
+  /** Apply all ops as one lazy plan; one action materializes the whole
+    * chain. No lineage cut at dedup inputs: batch keep-first is one
+    * window over a single reference to its input, so a cut there would
+    * only store the rows a second time. An operator that reads its
+    * input more than once cuts it itself
+    * ([[graft.operators.Lineage.cut]]); that is where a fused chain
+    * gains from a cut. */
+  def apply(df: DataFrame): DataFrame = fold(df)((_, _, d) => d)
 
   /** Apply with an `observe` row-counter after the input and after every
     * op. Returns the result plus the Observation handles; read them with
-    * [[funnelReport]] after running any action on the result. */
+    * [[funnelReport]] after running any action on the result. The
+    * counts equal [[funnelStaged]]'s (PipelineSpec checks this over
+    * generated chains), except where an operator's internal iteration
+    * checkpoint buries the counters below it (see [[funnelReport]]). */
   def observed(df: DataFrame): (DataFrame, Seq[(String, Observation)]) = {
-    val obsIn = new Observation()
-    var obs = Vector("input" -> obsIn)
-    var cur = df.observe(obsIn, count(lit(1)).as("n"))
-    ops.foreach { op =>
-      cur = (op match {
-        case FilterOp(_, p) => cur.filter(p(cur))
-        case RefineOp(_, f) => f(cur)
-        // NO dedupCut here: a localCheckpoint would bury the upstream
-        // observe nodes inside an opaque RDD whose CollectMetrics never
-        // reach the action's Observation listener (counts read 0).
-        // Operators with an internal cut (UrlDedup) keep it — their
-        // own observe nodes sit above the checkpoint.
-        case DedupOp(_, k, id) => graft.operators.dedup.KeepFirst(cur, k(cur), id)
-      })
+    val obs = Vector.newBuilder[(String, Observation)]
+    val out = fold(df) { (_, name, d) =>
       val o = new Observation()
-      obs :+= op.name -> o
-      cur = cur.observe(o, count(lit(1)).as("n"))
+      obs += name -> o
+      d.observe(o, count(lit(1)).as("n"))
     }
-    (cur, obs)
+    (out, obs.result())
   }
 
   /** (step, n_rows) after an action has materialized the observed
@@ -106,18 +121,8 @@ case class Pipeline(ops: Seq[PipelineOp]) {
     * extra jobs, collected by
     * [[graft.streaming.StreamingMetricsListener]]. Names carry a
     * zero-padded stage index so reports keep pipeline order. */
-  def observedStream(df: DataFrame): DataFrame = {
-    var cur = df.observe("graft_stage_000_input", count(lit(1)).as("n"))
-    ops.zipWithIndex.foreach { case (op, i) =>
-      cur = (op match {
-        case FilterOp(_, p) => cur.filter(p(cur))
-        case RefineOp(_, f) => f(cur)
-        case DedupOp(_, k, id) => graft.operators.dedup.KeepFirst(cur, k(cur), id)
-      })
-      cur = cur.observe(f"graft_stage_${i + 1}%03d_${op.name}", count(lit(1)).as("n"))
-    }
-    cur
-  }
+  def observedStream(df: DataFrame): DataFrame =
+    fold(df)((i, name, d) => d.observe(f"graft_stage_$i%03d_$name", count(lit(1)).as("n")))
 
   /** Diagnostic per-operator profiling: each stage is materialized and
     * timed on its own — the reference's execution model (one actor-pool
@@ -128,75 +133,46 @@ case class Pipeline(ops: Seq[PipelineOp]) {
     * profile() on a sample to find the slow operator, then run fused.
     *
     * Stages are cut with `localCheckpoint(eager = true)`, NOT
-    * `persist`: self-referencing stages (winners ⋈ input dedups)
-    * expand the shared upstream subtree once per reference, so a
+    * `persist`: an operator that references its input more than once
+    * (URL dedup's winners semi-join, the pHash/video near-dup joins)
+    * expands the shared upstream subtree once per reference, so a
     * cumulatively-composed chain's *printed* tree grows exponentially
-    * with stage count even though the in-memory DAG is shared — and
+    * with such stages even though the in-memory DAG is shared — and
     * `persist` renders exactly that tree for the cache name
     * (InMemoryRelation's cachedName), which at stage 8+ of the
     * curation capstone is an OOM, not a string. The checkpoint
     * replaces each stage's plan with a compact LogicalRDD, bounding
     * every downstream plan by ONE stage's ops. Checkpointed blocks are
-    * released by the ContextCleaner as stage references drop. */
+    * released by the ContextCleaner as stage references drop. Each
+    * stage's wall runs from the end of the previous stage's count —
+    * its plan build included — to the end of its own. */
   def profile(df: DataFrame): (DataFrame, Seq[StageMetrics]) = {
-    // Per-stage row counts ride the checkpoint job itself: an `observe`
-    // node directly under the EAGER localCheckpoint is executed by the
-    // checkpoint's own action (Dataset.checkpoint runs under
-    // withAction, so the CollectMetrics accumulators deliver to the
-    // Observation — graft.ObsProbe verifies this on the running Spark).
-    // The old separate `count()` per stage paid one extra job AND one
-    // extra full deserializing scan of each stage's just-materialized
-    // blocks — 2·|stages| actions where |stages|+ suffice.
-    def counted(d: DataFrame): (DataFrame, Observation) = {
-      val o = new Observation()
-      (d.observe(o, count(lit(1)).as("n")).localCheckpoint(true), o)
+    val metrics = Vector.newBuilder[StageMetrics]
+    var rowsIn = 0L
+    var t0 = 0L
+    val out = fold(df) { (i, name, d) =>
+      val (cut, rows) = Pipeline.checkpointCounted(d)
+      if (i > 0) metrics += StageMetrics(name, rowsIn, rows, (System.nanoTime() - t0) / 1e9)
+      rowsIn = rows
+      t0 = System.nanoTime()
+      cut
     }
-    def rowsOf(o: Observation): Long =
-      o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    val (cur0, obs0) = counted(df)
-    var cur = cur0
-    var rows = rowsOf(obs0)
-    val metrics = ops.map { op =>
-      val t0 = System.nanoTime()
-      val (next, o) = counted(op match {
-        case FilterOp(_, p) => cur.filter(p(cur))
-        case RefineOp(_, f) => f(cur)
-        case DedupOp(_, k, id) => graft.operators.dedup.KeepFirst(cur, k(cur), id)
-      })
-      val outRows = rowsOf(o)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val m = StageMetrics(op.name, rows, outRows, wall)
-      cur = next
-      rows = outRows
-      m
-    }
-    (cur, metrics)
+    (out, metrics.result())
   }
 
   /** [[profile]]'s staged execution (each stage localCheckpointed once,
-    * so self-referencing stages never re-derive their upstream and the
-    * plan stays bounded by one stage's ops) WITHOUT the per-stage
-    * count actions — for consumers that need only the FINAL frame, the
-    * 2·|stages| jobs profile() pays for its metrics are pure overhead.
-    * The last stage skips its checkpoint too: its output flows straight
-    * into whatever action the caller runs. */
-  def stagedApply(df: DataFrame): DataFrame = {
-    if (ops.isEmpty) return df
-    // LAZY checkpoints (see [[rejectionAudit]]): the caller's one
-    // action materializes each stage exactly once — same per-stage
-    // plan-compaction and self-reference sharing as the eager form,
-    // without |stages| rounds of job-submission latency.
-    var cur = df.localCheckpoint(false)
-    ops.zipWithIndex.foreach { case (op, i) =>
-      val next = op match {
-        case FilterOp(_, p) => cur.filter(p(cur))
-        case RefineOp(_, f) => f(cur)
-        case DedupOp(_, k, id) => graft.operators.dedup.KeepFirst(cur, k(cur), id)
-      }
-      cur = if (i == ops.length - 1) next else next.localCheckpoint(false)
-    }
-    cur
-  }
+    * so the plan stays bounded by one stage's ops) WITHOUT the
+    * per-stage counts — for consumers that need only the FINAL frame.
+    * The checkpoints are LAZY: the caller's one action materializes
+    * each stage exactly once, without |stages| rounds of
+    * job-submission latency. The last stage skips its checkpoint: its
+    * output flows straight into whatever action the caller runs.
+    * Use it where operators read their inputs more than once and the
+    * fused plan re-derives them per reference: the 13-stage curation
+    * capstone at sf0.01, local[4], min-of-4 ran 5.2 s / 104 jobs fused
+    * and 2.6 s / 56 jobs staged (`curation_softdedup_weights`). */
+  def stagedApply(df: DataFrame): DataFrame =
+    fold(df)((i, _, d) => if (i == ops.length) d else d.localCheckpoint(false))
 
   /** Per-document rejection audit — the provenance twin of the funnel:
     * for every INPUT row, which stage dropped it (`rejected_by`, with
@@ -204,42 +180,32 @@ case class Pipeline(ops: Seq[PipelineOp]) {
     * document gone" answer a curation run owes its corpus users, and
     * the per-stage sample you debug a threshold with.
     *
-    * Staged like [[profile]] (each stage checkpointed once). The
-    * verdict is resolved in ONE aggregation: each stage boundary
-    * contributes a narrow (id, reached=i) projection of its
-    * checkpointed output, and a row's verdict is its MAX reached stage
-    * — stage row sets only shrink (the "exactly one verdict" contract
-    * this method's spec asserts), so the first stage an id is missing
-    * from is `max(reached) + 1`. The previous shape paid a left-anti
-    * join per stage — |stages| joins, each shuffling BOTH the stage's
-    * input and output ids (≈2× the bytes) plus a deserializing scan of
-    * each checkpointed stage twice; one union + groupBy scans each
-    * stage once and shuffles each id set once. Union legs are trivial
-    * projections over already-checkpointed RDDs, so the plan stays
-    * linear in stage count (no mid-chain accumulator folding needed —
-    * that discipline guarded the per-stage JOIN legs of the old shape).
+    * Staged like [[stagedApply]] (each stage lazily checkpointed once:
+    * one final action materializes every stage exactly once, each
+    * checkpointed RDD cached on first use and shared by the next stage
+    * and its union leg). The verdict is resolved in ONE aggregation:
+    * each stage boundary contributes a narrow (id, reached=i)
+    * projection of its checkpointed output, and a row's verdict is its
+    * MAX reached stage — stage row sets only shrink (the "exactly one
+    * verdict" contract this method's spec asserts), so the first stage
+    * an id is missing from is `max(reached) + 1`. The previous shape
+    * paid a left-anti join per stage — |stages| joins, each shuffling
+    * BOTH the stage's input and output ids (≈2× the bytes) plus a
+    * deserializing scan of each checkpointed stage twice; one union +
+    * groupBy scans each stage once and shuffles each id set once.
+    * Union legs are trivial projections over already-checkpointed
+    * RDDs, so the plan stays linear in stage count.
     * `idCol` must be unique per input row (the corpus contract every
     * dedup in the chain already assumes). */
   def rejectionAudit(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    // LAZY per-stage checkpoints: the audit needs no per-stage driver
-    // value (unlike [[profile]]'s observations), so ONE final action
-    // materializes every stage exactly once — each checkpointed RDD is
-    // cached on first use and shared by its self-references, the next
-    // stage and its union leg — instead of |stages| eager jobs paying
-    // |stages| rounds of job-submission latency.
-    var cur = df.localCheckpoint(false)
-    var legs = Vector(cur.select(col(idCol), lit(0).as("__reached")))
-    ops.zipWithIndex.foreach { case (op, i) =>
-      val next = (op match {
-        case FilterOp(_, p) => cur.filter(p(cur))
-        case RefineOp(_, f) => f(cur)
-        case DedupOp(_, k, id) => graft.operators.dedup.KeepFirst(cur, k(cur), id)
-      }).localCheckpoint(false)
-      legs :+= next.select(col(idCol), lit(i + 1).as("__reached"))
-      cur = next
+    val legs = Vector.newBuilder[DataFrame]
+    fold(df) { (i, _, d) =>
+      val cut = d.localCheckpoint(false)
+      legs += cut.select(col(idCol), lit(i).as("__reached"))
+      cut
     }
     val names = array(ops.map(o => lit(o.name)): _*)
-    legs.reduce(_ unionByName _)
+    legs.result().reduce(_ unionByName _)
       .groupBy(col(idCol)).agg(max(col("__reached")).as("__r"))
       .select(col(idCol),
         when(col("__r") === ops.length, lit(0))
@@ -248,13 +214,12 @@ case class Pipeline(ops: Seq[PipelineOp]) {
           .otherwise(element_at(names, col("__r") + 1)).as("rejected_by"))
   }
 
-  /** Per-stage funnel as a DataFrame (step_idx, step, n_rows) —
-    * computed the staged way ([[profile]]: each stage checkpointed
-    * once, counted, previous stage released), NOT via `observe`: dedup
-    * operators reference their input twice (winners ⋈ input), and a
-    * CollectMetrics node inside a self-referenced subtree would count
-    * every row once per reference. Counts are a handful of driver longs
-    * (one per stage) — bounded regardless of corpus size. */
+  /** Per-stage funnel as a DataFrame (step_idx, step, n_rows), from
+    * [[profile]]'s staged counts — exact where [[observed]]'s fused
+    * counters cannot be read (an operator's internal iteration
+    * checkpoint buries them; see [[funnelReport]]). Counts are a
+    * handful of driver longs (one per stage) — bounded regardless of
+    * corpus size. */
   def funnelStaged(df: DataFrame): DataFrame = {
     val (_, metrics) = profile(df)
     val spark = df.sparkSession
@@ -316,52 +281,20 @@ case class Pipeline(ops: Seq[PipelineOp]) {
     sb.append("=" * 60)
     sb.toString
   }
-
-  /** Single-pass funnel for filter/dedup-only pipelines: one scan, one
-    * aggregate — the 100 TB-friendly way to audit pass-rates without
-    * running the pipeline N times. Refiners are applied (they may feed
-    * later predicates) but do not add funnel steps of their own beyond a
-    * pass-through count. */
-  def funnelCounts(df: DataFrame): DataFrame = {
-    // build cumulative predicates against the fully-refined frame
-    val refined = ops.foldLeft(df) {
-      case (d, RefineOp(_, f)) => f(d)
-      case (d, _) => d
-    }
-    // Project each stage's predicate/dedup-key expression ONCE as a
-    // column; the aggregate below then conjoins cheap slot reads.
-    // Embedding the raw predicates directly would re-inline predicates
-    // 1..k into stage k's agg expression — O(stages² · |predicate|)
-    // generated code inside ONE hashAgg doConsume, which whole-stage
-    // codegen cannot split (inputs are Java locals) and janino then
-    // fails to compile, silently dropping the plan to interpreted.
-    // Multi-referenced non-cheap columns also block CollapseProject, so
-    // the projection genuinely survives into the physical plan.
-    val staged = ops.zipWithIndex.map {
-      case (FilterOp(n, p), i) => (s"__funnel_p$i", p(refined))
-      case (DedupOp(_, k, _), i) => (s"__funnel_k$i", k(refined))
-      case (RefineOp(_, _), i) => (s"__funnel_r$i", lit(true))
-    }
-    val projected = refined.select(col("*") +: staged.map {
-      case (c, e) => e.as(c) }: _*)
-    var cum: Column = lit(true)
-    var aggs = Vector[(String, Column)]("input" -> count(lit(1)))
-    ops.zipWithIndex.foreach {
-      case (FilterOp(n, _), i) =>
-        cum = cum && col(s"__funnel_p$i")
-        aggs :+= n -> sum(when(cum, 1L).otherwise(0L))
-      case (RefineOp(n, _), _) =>
-        aggs :+= n -> sum(when(cum, 1L).otherwise(0L))
-      case (DedupOp(n, _, _), i) =>
-        aggs :+= n -> countDistinct(when(cum, col(s"__funnel_k$i")))
-    }
-    val row = projected.agg(aggs.head._2.as("c0"),
-      aggs.tail.zipWithIndex.map { case ((_, c), i) => c.as(s"c${i + 1}") }: _*)
-    val steps = aggs.map(_._1).zipWithIndex.map { case (n, i) =>
-      struct(lit(i).as("step_idx"), lit(n).as("step"), col(s"c$i").cast("long").as("n_rows"))
-    }
-    row.select(explode(array(steps: _*)).as("s"))
-      .select(col("s.step_idx"), col("s.step"), col("s.n_rows"))
-  }
 }
 
+object Pipeline {
+
+  /** Eager `localCheckpoint` of `df` with its row count: an `observe`
+    * node directly under the checkpoint is executed by the checkpoint's
+    * own action (Dataset.checkpoint runs under withAction, so the
+    * CollectMetrics accumulators deliver to the Observation —
+    * PipelineSpec asserts this on the running Spark). A separate
+    * `count()` would pay one more job and one more deserializing scan
+    * of the just-materialized blocks. */
+  private[graft] def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val o = new Observation()
+    val cut = df.observe(o, count(lit(1)).as("n")).localCheckpoint(true)
+    (cut, o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L))
+  }
+}

@@ -28,7 +28,7 @@ object PipelineQueries {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pipeline_funnel" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      curationPipeline.funnelCounts(docs)
+      curationPipeline.funnelStaged(docs)
     }),
 
     "events_exact_stats" -> ((s, dir) => {

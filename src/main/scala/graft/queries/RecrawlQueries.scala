@@ -69,34 +69,15 @@ object RecrawlQueries {
         scala.concurrent.ExecutionContext.global)
       val statuses = diffT.groupBy("status").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // staged per-op counts over the delta (the profile() discipline:
-      // checkpoint each stage once); every count rides its stage's OWN
-      // eager-checkpoint action as an observe node instead of paying a
-      // separate count job + a second scan of the materialized blocks
-      // (Pipeline.profile's shape, graft.ObsProbe's contract)
-      def counted(d: org.apache.spark.sql.DataFrame) = {
-        val o = new org.apache.spark.sql.Observation()
-        (d.observe(o, count(lit(1)).as("n")).localCheckpoint(true), o)
-      }
-      def rowsOf(o: org.apache.spark.sql.Observation): Long =
-        o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-      val (cur0, oDelta) = counted(deltaDocs)
-      var cur = cur0
-      val stageCounts = RecrawlCapstone.perDoc.ops.map { op =>
-        val (next, o) = counted(op match {
-          case graft.pipeline.FilterOp(_, p) => cur.filter(p(cur))
-          case graft.pipeline.RefineOp(_, f) => f(cur)
-          case other => throw new IllegalStateException(
-            s"unexpected recrawl per-doc op: $other")
-        })
-        cur = next
-        op.name -> rowsOf(o)
-      }
-      val (es, oEs) = counted(
+      // staged per-op counts over the delta (Pipeline.profile: each
+      // stage checkpointed once, its count riding the checkpoint's own
+      // action), then the two index probes counted the same way
+      val (cur, perOp) = RecrawlCapstone.perDoc.profile(deltaDocs)
+      val (es, esN) = graft.pipeline.Pipeline.checkpointCounted(
         RecrawlOps.exactSurvivors(state.exactIndex, cur))
-      val (_, oMs) = counted(graft.operators.dedup.IncrementalMinHashDedup(
-        RecrawlCapstone.lsh).survivors(state.bandIndex, es))
-      val msN = rowsOf(oMs)
+      val (_, msN) = graft.pipeline.Pipeline.checkpointCounted(
+        graft.operators.dedup.IncrementalMinHashDedup(RecrawlCapstone.lsh)
+          .survivors(state.bandIndex, es))
       val day1 = scala.concurrent.Await.result(day1F,
         scala.concurrent.duration.Duration.Inf)
       val steps: Seq[(String, Long)] =
@@ -105,9 +86,9 @@ object RecrawlQueries {
           "diff_changed" -> statuses.getOrElse("changed", 0L),
           "diff_unchanged" -> statuses.getOrElse("unchanged", 0L),
           "diff_removed" -> statuses.getOrElse("removed", 0L),
-          "delta_input" -> rowsOf(oDelta)) ++
-        stageCounts ++
-        Seq("incremental_exact" -> rowsOf(oEs),
+          "delta_input" -> perOp.head.rowsIn) ++
+        perOp.map(m => m.op -> m.rowsOut) ++
+        Seq("incremental_exact" -> esN,
           "incremental_minhash" -> msN,
           "corpus_day1" -> day1,
           "corpus_day2" -> (day1 + msN))

@@ -35,7 +35,7 @@ class ConfigSpec extends SparkSpec {
     val out = pipe(docs)
     assert(out.columns.contains("q_score"))
     assert(out.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L))
-    val funnel = pipe.funnelCounts(docs)
+    val funnel = pipe.funnelStaged(docs)
       .select("step", "n_rows").as[(String, Long)].collect().toMap
     assert(funnel == Map("input" -> 4L, "quality_scorer" -> 4L,
       "text_length_filter" -> 3L, "url_filter" -> 2L,
@@ -178,6 +178,29 @@ class ConfigSpec extends SparkSpec {
     assert(out.select("doc_id").as[Long].collect().toSeq == Seq(1L))
     assert(out.columns.contains("q_score")) // refiner ran in the stream
     assert(new java.io.File(s"$dir/out__checkpoint").exists())
+  }
+
+  test("runStream rejects a batch dedup stage before any query starts") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sdedup").toString
+    val in = Seq((1L, "a sufficiently long document"), (2L, "a sufficiently long document"))
+      .toDF("doc_id", "text")
+    in.write.parquet(s"$dir/in")
+    val yaml =
+      s"""data_loader: {type: ParquetLoader, params: {path: $dir/in}}
+         |operators:
+         |  - name: text_length_filter
+         |    params: {min_length: 10}
+         |  - name: text_exact_deduplicator
+         |data_writer: {type: ParquetDataWriter, params: {path: $dir/out}}
+         |""".stripMargin
+    val job = PipelineConfig.parseJob(yaml)
+    val active = spark.streams.active.length
+    val e = intercept[IllegalArgumentException](
+      job.runStream(spark, in.schema, availableNow = true))
+    assert(e.getMessage.contains("'text_exact_deduplicator'"))
+    assert(e.getMessage.contains("StreamingOps.dedupStream"))
+    assert(spark.streams.active.length == active)
+    assert(!new java.io.File(s"$dir/out__checkpoint").exists())
   }
 
   test("config-driven stream surfaces per-stage funnel metrics per batch") {

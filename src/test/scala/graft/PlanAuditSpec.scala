@@ -231,6 +231,44 @@ class PlanAuditSpec extends SparkSpec {
       s"$kernel missing from every WholeStageCodegen subtree:\n$s")
   }
 
+  test("fused apply of a config-built crawl chain: one window, no cut, pinned jobs") {
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val pipeline = graft.pipeline.PipelineConfig.parse(
+      """operators:
+        |  - name: url_filter
+        |    params: {blocklist_domains: [src1.example.com]}
+        |  - name: text_length_filter
+        |    params: {min_length: 100}
+        |  - name: text_exact_deduplicator
+        |""".stripMargin)
+    val docs = Tables.load(spark, dir, "documents").withColumn("url",
+      concat(lit("https://"), col("source"), lit(".example.com/"), col("doc_id")))
+    val out = pipeline(docs)
+    // keep-first is ONE window over a single reference to its input, so
+    // the fused plan carries no lineage cut (no checkpointed-RDD scan)
+    val opt = out.queryExecution.optimizedPlan
+    assert(opt.collect { case w: Window => w }.size == 1, opt)
+    assert(opt.collect { case r: LogicalRDD => r }.isEmpty, opt)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val target = java.nio.file.Files.createTempDirectory("graft_crawl_jobs").toString
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      jobs.set(0)
+      out.write.mode("overwrite").parquet(target)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the scan-side map stage and the window-side write (AQE runs each
+    // shuffle stage as its own job)
+    assert(jobs.get == 2, s"apply + parquet write ran ${jobs.get} jobs")
+  }
+
   test("new TPC-H shapes keep their scale plans") {
     // q8: the full star joins every dimension as broadcast — the fact
     // table shuffles only for the final year aggregation
