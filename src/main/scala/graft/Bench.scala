@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 object Bench {
   /** Repo root derived from the classes directory — bench_full.json and
     * the baseline pins anchor here, not wherever the JVM was launched.
@@ -41,24 +43,16 @@ object Bench {
     pins
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // local[cpus] and as many shuffle partitions (default 4 when
-    // SPARK_GRAFT_CPUS is unset, where the builder would pick 32)
-    val spark = GraftSession.builder("graft-bench")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the JVM paths every query shares — parquet scan setup, codegen,
-    // shuffle, broadcast, window, higher-order-function interpreter — on a
-    // 25-row table, so the first queries measured don't absorb one-time
-    // JIT cost. No query results are precomputed.
+  /** Warm the JVM paths every query shares — parquet scan setup,
+    * codegen, shuffle, broadcast, window, higher-order-function
+    * interpreter — on the 25-row `nation` table of `dir`, so the first
+    * queries measured don't absorb one-time JIT cost. No query results
+    * are precomputed. Throws when `dir` has no `nation` table. */
+  private[graft] def warmUp(spark: SparkSession, dir: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    val nation = spark.read.parquet(s"$sfDir/nation.parquet")
+    val nation = spark.read.parquet(s"$dir/nation.parquet")
     nation.selectExpr("n_nationkey", "n_regionkey", "md5(n_name) AS h",
         "transform(sequence(1, 8), i -> i * n_nationkey) AS arr")
       .withColumn("x", explode(col("arr")))
@@ -67,6 +61,12 @@ object Bench {
       .withColumn("rn", row_number().over(
         Window.partitionBy("n_regionkey").orderBy("n_nationkey")))
       .selectExpr("count(distinct h)", "max(rn)").collect()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.harnessLocal("graft-bench")
+    warmUp(spark, sfDir)
     // Local-iteration lever: SPARK_GRAFT_BENCH_KEYS=a,b,c times only the
     // named keys. Absent (the driver's invocation) → the full registry.
     val keyFilter = sys.env.get("SPARK_GRAFT_BENCH_KEYS")

@@ -31,8 +31,9 @@ object GraftSession {
     * default 100): a bounded map from generated source to its compiled
     * class, shared by every query in the JVM. It is a STATIC conf —
     * `CodeGenerator` reads it once, when the JVM first compiles — so it
-    * is set here, where the SparkContext is built; `graft.Bench` and
-    * `graft.Verify` build their sessions through [[builder]] too.
+    * is set here, where the SparkContext is built. Every session in
+    * `src/main` is built through [[builder]] (`SessionFactorySpec` gates
+    * it), so none runs with Spark's default.
     *
     * The default is smaller than graft's working sets, and a cache that
     * is smaller than a repeating cycle of classes misses on every access.
@@ -62,10 +63,12 @@ object GraftSession {
       .builder()
       .appName(appName)
       // Defaults to the core count; SPARK_GRAFT_SHUFFLE_PARTITIONS
-      // decouples it for scale probes. Partition count must grow with
-      // the DATA, not the cores: a shuffle stage's per-task state
-      // (hash-aggregate maps, join buffers) is partition-sized, and at
-      // 100× data on fixed partitions each task's map outgrows cache —
+      // decouples it on a cluster, where the driver's core count says
+      // nothing about the executors' cores or the data size. Partition
+      // count must grow with the DATA, not the cores: a shuffle stage's
+      // per-task state (hash-aggregate maps, join buffers) is
+      // partition-sized, and at 100× data on fixed partitions each
+      // task's map outgrows cache —
       // measured on q21@100×: 32→256 partitions cuts the fused
       // SMJ+aggregate stage's per-task state 8× (see SURVEY §5.11).
       // AQE coalesces small partitions back, so oversizing is cheap.
@@ -97,6 +100,18 @@ object GraftSession {
       cores: Int = configuredCpus
         .getOrElse(Runtime.getRuntime.availableProcessors())): SparkSession = {
     val s = builder(appName).master(s"local[$cores]").getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** Session of the bench and oracle-dump mains ([[Bench]], [[Verify]]):
+    * `local[n]` with n shuffle partitions, n = `SPARK_GRAFT_CPUS`, or 4
+    * when it is unset (where [[builder]] alone would pick 32 partitions).
+    * The value is validated like every other `SPARK_GRAFT_CPUS` read. */
+  private[graft] def harnessLocal(appName: String): SparkSession = {
+    val cpus = configuredCpus.getOrElse(4)
+    val s = builder(appName).master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -17,22 +17,9 @@ object Probe {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = GraftSession.local("graft-probe")
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    scala.util.Try { // docs-only corpora carry no nation table; skip
-      // (the read itself must sit inside the Try — spark.read.parquet
-      // throws PATH_NOT_FOUND eagerly at analysis, not at execution)
-      val nation = spark.read.parquet(s"$dir/nation.parquet")
-      nation.selectExpr("n_nationkey", "n_regionkey", "md5(n_name) AS h",
-          "transform(sequence(1, 8), i -> i * n_nationkey) AS arr")
-        .withColumn("x", explode(col("arr")))
-        .groupBy("h").agg(sum("x").as("sx"), min("n_regionkey").as("rk"))
-        .join(broadcast(nation), col("rk") === col("n_regionkey"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("n_regionkey").orderBy("n_nationkey")))
-        .selectExpr("count(distinct h)", "max(rn)").collect()
-    }
+    // docs-only corpora carry no nation table; the warm-up's nation
+    // read throws PATH_NOT_FOUND at analysis, so it sits inside the Try
+    scala.util.Try(Bench.warmUp(spark, dir))
     names.foreach { name =>
       System.gc()
       val t0 = System.nanoTime()

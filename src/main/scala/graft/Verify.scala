@@ -5,14 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // local[cpus] and as many shuffle partitions (default 4 when
-    // SPARK_GRAFT_CPUS is unset, where the builder would pick 32)
-    val spark = GraftSession.builder("graft-verify")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harnessLocal("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Local-iteration lever (mirrors Bench): SPARK_GRAFT_VERIFY_KEYS=a,b
     // dumps only the named keys. Absent (the driver's invocation) → all.

@@ -520,7 +520,7 @@ case class NgramJaccard(
     * bucket selectivity: r=2 at τ=0.2 needs 340 hashes / 170 bands but
     * cuts candidates 13× (42.5/doc vs 558/doc at 50k docs).
     *
-    * Measured (graft.DedupProfile, τ=0.2, same box, r11 — the
+    * Measured (SURVEY §5.22's retired funnel main, τ=0.2, r11 — the
     * [[MinHashSignature]] one-aggregate signature; the pre-r11
     * n-min-columns aggregate lost whole-stage codegen past 100 fields
     * and made r=2's 340 hashes artificially expensive): at 5k docs

@@ -420,9 +420,9 @@ object DegradationTrainer {
 
   /** Prints fitted coefficients (source of the frozen literals above). */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().appName("degradation-trainer")
+    val spark = graft.GraftSession.builder("degradation-trainer")
       .master("local[8]").config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false).getOrCreate()
+      .getOrCreate()
     val (b, n) = train(spark)
     val (cc, wm) = trainExt(spark)
     def fmt(h: LinearHead): String =

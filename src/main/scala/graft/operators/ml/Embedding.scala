@@ -255,9 +255,9 @@ object EmbeddingTrainer {
 
   /** Prints the fitted literals (source of [[TrainedEmbedding.projection]]). */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().appName("embedding-trainer")
+    val spark = graft.GraftSession.builder("embedding-trainer")
       .master("local[8]").config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false).getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val p = train(spark)
     def arr(a: Array[Double]): String =

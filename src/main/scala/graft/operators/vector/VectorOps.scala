@@ -902,7 +902,7 @@ case class SemanticDedup(
     * re-joined. The earlier narrow-pairs-then-back-join form re-sorted
     * the full pair stream with 520-byte vectors attached to satisfy the
     * second join; at 250k vectors × k=64 that sort spilled ~80 GB and
-    * filled the disk (measured — graft.VecProbe r11). The banded
+    * filled the disk (measured r11; SURVEY §5.22's retired probe). The banded
     * tier-2/3 streams pipeline the same way ([[bandedDrops]]) — their
     * "sparse" pair stream is ~10⁸ rows at 1M vectors. SMJ buffers one
     * bucket's match group at a time — at most cap rows. */

@@ -167,10 +167,10 @@ case class Pipeline(ops: Seq[PipelineOp]) {
     * each stage exactly once, without |stages| rounds of
     * job-submission latency. The last stage skips its checkpoint: its
     * output flows straight into whatever action the caller runs.
-    * Use it where operators read their inputs more than once and the
-    * fused plan re-derives them per reference: the 13-stage curation
-    * capstone at sf0.01, local[4], min-of-4 ran 5.2 s / 104 jobs fused
-    * and 2.6 s / 56 jobs staged (`curation_softdedup_weights`). */
+    * Use it where operators read their inputs more than once without
+    * cutting them. The curation capstone's multi-reference ops cut
+    * their own inputs, so there the modes tie (sf0.01, local[4],
+    * min-of-4): 4.3 s / 53 jobs fused, 4.6 s / 54 jobs staged. */
   def stagedApply(df: DataFrame): DataFrame =
     fold(df)((i, _, d) => if (i == ops.length) d else d.localCheckpoint(false))
 

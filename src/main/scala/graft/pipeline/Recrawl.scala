@@ -66,7 +66,7 @@ import org.apache.spark.sql.functions._
   * chain touches |added| + |changed| rows only. Both index probes are
   * equi-joins keyed by the index's storage layout (hash set / band
   * partitions), so a day's ingest cost is independent of corpus size —
-  * the property [[graft.ScaleProbe]]'s `recrawl` op measures. Rolling
+  * measured at 250k vs 1M docs in SURVEY §5.14 (probe: §5.22). Rolling
   * forward appends narrow rows (a hash / (id, band, bucket)); the
   * curated payload appends survivors once. `graft.Main recrawl-*`
   * commits all three artifacts with the `batch=<id>` staging-rename

@@ -97,12 +97,11 @@ object CurationQueries {
       val benchDir = java.nio.file.Files
         .createTempDirectory("graft_capstone_bench").toString
       benchmarkFrame(docs).write.mode("overwrite").parquet(benchDir)
-      // the STAGED run (per-stage lazy localCheckpoint), not the raw
-      // folded plan: operators after the quality-survivor cut (the
-      // top-fraction gate, the CCNet and soft-dedup stages) read their
-      // inputs more than once, and fused, each reference re-derives
-      // its upstream stages — the whole capstone at sf0.01, local[4],
-      // min-of-4 ran 5.2 s / 104 jobs fused vs 2.6 s / 56 jobs staged.
+      // the STAGED run (per-stage lazy localCheckpoint). Since the
+      // top-fraction gate and the CCNet stage cut their own inputs, the
+      // fused plan ties with it: the whole capstone at sf0.01,
+      // local[4], min-of-4, two JVMs ran 4.3 s / 53 jobs fused vs
+      // 4.6 s / 54 jobs staged (uncut, fused read 7.1 s / 77 jobs).
       // stagedApply, not profile(): this key consumes only the final
       // frame, so profile()'s per-stage count actions were overhead.
       CurationCapstone.pipeline(benchDir).stagedApply(preppedInput(docs))

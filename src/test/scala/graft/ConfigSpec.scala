@@ -128,7 +128,7 @@ class ConfigSpec extends SparkSpec {
       .benchmarkFrame(Tables.load(spark, "/root/testdata/sf0.001", "documents"))
       .write.mode("overwrite").parquet("/tmp/graft_out/capstone_bench")
     // the recrawl config's documented prerequisite: the second-crawl
-    // snapshot its RecrawlDeltaLoader diffs against (RecrawlProbe prep)
+    // snapshot its RecrawlDeltaLoader diffs against (SURVEY §5.22)
     graft.pipeline.RecrawlCapstone.deriveNewSnapshot(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select("doc_id", "source", "lang", "text"))

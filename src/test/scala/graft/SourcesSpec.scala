@@ -316,7 +316,8 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("co-bucketed one-sorted-file-per-bucket tables join with zero Sort nodes") {
-    // The BucketProbe 100× finding as a regression guard: with one
+    // The bucketed-layout 100× finding (SURVEY §5.11; its retired
+    // probe main is listed in §5.22) as a regression guard: with one
     // sorted file per bucket (repartition on the bucket key before
     // bucketBy+sortBy) and the bucketed-scan output-ordering flag, the
     // orderkey SMJ loses its sorts as well as its exchanges — the scan

@@ -6,27 +6,19 @@ by name, rows sorted, exact value match).
 
 Usage: python3 tools/check.py [sf_dir] [query ...]
 """
-import json, subprocess, sys, glob, os
+import json, subprocess, sys, os
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
 OUT = "/tmp/graft_verify"
 
-CP = "target/scala-2.13/classes:" + ":".join(glob.glob("/opt/spark/jars/*.jar"))
-OPENS = []
-for p in ["java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
-          "java.base/java.io", "java.base/java.net", "java.base/java.nio", "java.base/java.util",
-          "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
-          "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
-          "java.base/sun.util.calendar"]:
-    OPENS += ["--add-opens", p + "=ALL-UNNAMED"]
+JRUN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jrun.sh")
 
 
 def run_verify():
     env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    cmd = (["java"] + OPENS +
-           ["-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC", "-Xmx8g",
-            "-cp", CP, "graft.Verify", SF, OUT])
+    # jrun.sh runs from the repo root, so the table dir goes in absolute
+    cmd = [JRUN, "-JXmx8g", "graft.Verify", os.path.abspath(SF), OUT]
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
     for line in r.stderr.splitlines():
         if "[verify]" in line or "Exception" in line:
